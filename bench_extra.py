@@ -1,7 +1,8 @@
 """Extra benchmarks (guide §1.4 noop-sink isolation) — NOT the driver
 contract; bench.py stays the frozen measurement. Usage:
   python bench_extra.py <query>[,<query>...] [n_runs]
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0), SPARK_GRAFT_CPUS.
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
+(default: every CPU this process may run on).
 Prints per-query median/min over n_runs after one warmup run.
 """
 from __future__ import annotations
@@ -16,11 +17,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def main():
     names = sys.argv[1].split(",")
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entry
     from docext_spark.session import get_spark
-    spark = get_spark(app_name="bench_extra", master=f"local[{cpus}]")
+    spark = get_spark(app_name="bench_extra")
     qs = entry.queries()
     # JVM + python-worker warmup (mirrors bench.py)
     qs["q1_pricing_summary"](spark, sf_dir).collect()

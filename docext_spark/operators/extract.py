@@ -3,8 +3,12 @@ core kernels (X1-X7). No per-row Python outside the Arrow batch boundary;
 no driver-side loops.
 
 Every UDF here is ``Iterator[pd.Series] → Iterator[pd.DataFrame/Series]``
-(SCALAR_ITER) so worker-side setup cost is paid once per partition, not per
-batch.
+(SCALAR_ITER), so setup inside a UDF body runs once per task, not per batch.
+Python workers are reused across tasks, but each task still pays PySpark's
+per-task worker protocol before the body runs: unpickling the UDF command and
+``importlib.invalidate_caches()``, which on CPython < 3.13 re-reads every zip
+archive on the worker path. ``docext_spark/pyworker.py`` keeps Spark's
+archives off that path for local masters.
 """
 from __future__ import annotations
 

@@ -15,7 +15,12 @@ what an actual N→4N executor comparison controls for:
   costs a multi-hour 100TB job amortizes to zero.
 - Identical code and configs except master; median of timed runs.
 
-Usage: python scalebench.py [--n 8] [--runs 3] [--convs 40000]
+Ceiling: the 4N leg pins 4N CPUs, so ``--n`` is at most a quarter of the
+CPUs this process may run on (a 4-CPU host runs only N=1 → 4N=4). Driver
+heap and the input-preparation master come from ``get_spark``'s host
+defaults.
+
+Usage: python scalebench.py [--n 1] [--runs 3] [--convs 40000]
                             [--replicas 3] [--out BENCH/scaling.json]
 """
 from __future__ import annotations
@@ -38,7 +43,6 @@ cores, replicas, runs, input_dir, segmented = (
     bool(int(sys.argv[5])))
 os.sched_setaffinity(0, set(range(cores)))
 sys.path.insert(0, "/root/repo")
-os.environ["SPARK_DRIVER_MEM"] = "60g"
 from pyspark.sql import functions as F
 from docext_spark.session import get_spark
 from docext_spark.plans.pipeline import run_extraction
@@ -84,7 +88,7 @@ def prepare_input(n_convs: int, input_dir: str = INPUT_DIR,
     sys.path.insert(0, "/root/repo")
     from docext_spark.session import get_spark
     from docext_spark.synth import transcripts_df
-    spark = get_spark(app_name="scalebench_prep", master="local[32]")
+    spark = get_spark(app_name="scalebench_prep")
     transcripts_df(spark, n_convs=n_convs, median_turns=8,
                    hot_factor=hot_factor,
                    partitions=64).write.mode("overwrite").parquet(input_dir)
@@ -113,7 +117,7 @@ from bench import LOAD_CONTENDED, PSI_CONTENDED, is_contended  # noqa: E402
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=2)
+    ap.add_argument("--n", type=int, default=1)
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--convs", type=int, default=40000)
     ap.add_argument("--replicas", type=int, default=1)
@@ -125,6 +129,10 @@ def main():
                          "(salted) reassembly ON and OFF — the north "
                          "rule's hot-conversation-skew evidence")
     args = ap.parse_args()
+    cpus = len(os.sched_getaffinity(0))
+    if args.n * 4 > cpus:
+        ap.error(f"--n {args.n}: the 4N leg needs {args.n * 4} CPUs, "
+                 f"this process may run on {cpus}")
 
     # a scaling ratio from a contended box is WORSE than no number: r4 saw
     # a nonsensical super-linear 1.218 under contention. Refuse outright —
